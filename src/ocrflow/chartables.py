@@ -6,14 +6,16 @@ image to 1-D row/column profiles and classifies fixed-size glyph batches
 with a CNN whose weights are loaded once per process. Here the "image"
 is a unicode payload, the "profile" is a vectorized codepoint→class
 lookup (``np.take`` over a 0x110000-entry table), and the "CNN" is a
-small linear model (feature matrix @ weight vector) applied to whole
-batches at once. Both the tables and the weights are broadcast once per
+small linear model (a weighted feature sum) applied to whole batches
+at once. Both the tables and the weights are broadcast once per
 executor by pipeline.py (SURVEY.md §2.A A6/A9).
 
-Everything here is pure + deterministic: the single-node reference
-extractor (reference.py) and the distributed Arrow kernel (kernel.py)
-call the *same* functions, which is what makes the byte-for-byte
-equality contract (BASELINE.json north_rule) hold by construction.
+Everything here is pure + deterministic, and a row's result does not
+depend on how many rows share the call. The single-node reference
+extractor (reference.py) calls these functions once per turn; the Arrow
+kernel (kernel.py) calls them once per record batch. That batch path is
+checked against the per-turn reference for the byte-for-byte equality
+contract (BASELINE.json north_rule) by the end-to-end and property tests.
 """
 
 from __future__ import annotations
@@ -127,19 +129,18 @@ def default_weights() -> dict:
 def score_blocks(lengths: np.ndarray, link_density: np.ndarray,
                  is_code: np.ndarray, cjk_ratio: np.ndarray,
                  weights: np.ndarray = BLOCK_WEIGHTS) -> np.ndarray:
-    """Batched linear classify: one matvec for the whole block batch.
+    """Batched linear classify: one vectorized pass over the whole block batch.
 
-    The analog of ``model.predict(batch)`` in the reference: features are
-    stacked into one matrix and scored in a single numpy op.
+    The analog of ``model.predict(batch)`` in the reference. The weighted
+    features are summed elementwise in one fixed order rather than by a
+    BLAS matvec, whose summation order (and so the last bit of a score)
+    changes with the number of rows. A row therefore scores the same
+    whether the reference scores it with its turn or the kernel with its
+    whole Arrow batch, and both take the same keep decision at τ.
     """
-    n = len(lengths)
-    feats = np.empty((n, 5), dtype=np.float64)
-    feats[:, 0] = 1.0
-    feats[:, 1] = np.minimum(lengths, 100) / 100.0
-    feats[:, 2] = link_density
-    feats[:, 3] = is_code
-    feats[:, 4] = cjk_ratio
-    return feats @ weights
+    w = weights
+    return (w[0] + w[1] * (np.minimum(lengths, 100) / 100.0)
+            + w[2] * link_density + w[3] * is_code + w[4] * cjk_ratio)
 
 
 def score_spans(kind_codes: np.ndarray, lengths: np.ndarray,

@@ -429,10 +429,3 @@ def extract_turn(text: str | None, weights: dict | None = None,
              for s, e, k, sc in zip(starts, ends, kcodes, scores)]
     return ExtractResult(extracted, spans, kind)
 
-
-def extract_many(texts, weights: dict | None = None,
-                 roles=None) -> list[ExtractResult]:
-    """Batch helper used by the Arrow kernel (kernel.py) — same code path."""
-    weights = weights or ct.default_weights()
-    roles = roles or [None] * len(texts)
-    return [extract_turn(t, weights, r) for t, r in zip(texts, roles)]

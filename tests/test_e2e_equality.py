@@ -32,10 +32,7 @@ def _transcripts_df(spark, rows):
     return spark.createDataFrame(rows, schema=synth.TRANSCRIPTS_DDL)
 
 
-@pytest.mark.parametrize("partitions,salt", [(3, 1), (7, 4), (16, 8)])
-def test_spark_matches_golden(spark, rows, golden, partitions, salt):
-    df = _transcripts_df(spark, rows)
-    out = extract_df(spark, df, partitions=partitions, salt_buckets=salt)
+def _assert_matches_golden(out, golden):
     got = {(r["conv_id"], r["turn_idx"]): r for r in out.collect()}
     assert len(got) == len(golden)
     for key, res in golden.items():
@@ -48,15 +45,22 @@ def test_spark_matches_golden(spark, rows, golden, partitions, salt):
         assert gspans == res.spans, key
 
 
-def test_arrow_batch_size_invariance(spark, rows, golden):
-    # tiny batches → many kernel invocations; bytes must not change
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+@pytest.mark.parametrize("partitions,salt", [(3, 1), (7, 4), (16, 8)])
+def test_spark_matches_golden(spark, rows, golden, partitions, salt):
+    df = _transcripts_df(spark, rows)
+    out = extract_df(spark, df, partitions=partitions, salt_buckets=salt)
+    _assert_matches_golden(out, golden)
+
+
+@pytest.mark.parametrize("batch_rows", [1, 7, 16384])
+def test_arrow_batch_size_invariance(spark, rows, golden, batch_rows):
+    # the kernel scores blocks and segments spans once per Arrow batch:
+    # one-row batches, ragged batches and a whole partition in one batch
+    # must all give the same bytes
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_rows))
     try:
         out = extract_df(spark, _transcripts_df(spark, rows), partitions=5)
-        got = {(r["conv_id"], r["turn_idx"]): r["extracted_text"]
-               for r in out.collect()}
-        for key, res in golden.items():
-            assert got[key] == res.extracted_text, key
+        _assert_matches_golden(out, golden)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
 

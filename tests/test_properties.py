@@ -1,7 +1,13 @@
 """Property-based tests for the golden extractor (SURVEY.md §5.3)."""
 
+import json
+import os
+
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
+from ocrflow import chartables as ct
+from ocrflow import kernel
 from ocrflow import reference as R
 
 payloads = st.one_of(
@@ -66,6 +72,65 @@ def test_no_control_chars_in_output(payload):
     out = R.extract_turn(payload).extracted_text
     assert not any(ord(c) < 0x20 and c not in "\n\t" for c in out)
     assert not any(0xD800 <= ord(c) < 0xE000 for c in out)
+
+
+# --- batch kernel vs per-turn reference -------------------------------------
+
+_cjk = st.characters(min_codepoint=0x4E00, max_codepoint=0x9FFF)
+_line = st.text(alphabet=st.characters(blacklist_categories=("Cs",)), max_size=60)
+
+turn_texts = st.one_of(
+    st.none(),
+    st.just(""),
+    payloads,
+    # code fence first / unterminated fence last
+    st.builds(lambda code, tail: f"```\n{code}\n```\n\n{tail}", _line, _line),
+    st.builds(lambda head, code: f"{head}\n\n```py\n{code}", _line, _line),
+    # CJK as the first and last character
+    st.builds(lambda a, mid, b: a + mid + b, _cjk, _line, _cjk),
+    # every block dropped: link-only html, or prose too short to keep
+    st.builds(lambda w: f"<p><a href='#'>{w}</a></p>", st.text(max_size=20)),
+    st.text(alphabet="ab ", max_size=8),
+)
+turn_roles = st.sampled_from(["user", "assistant", "tool", "system", None])
+
+
+def _kernel_vs_reference(texts, roles):
+    n = len(texts)
+    batch = pa.RecordBatch.from_pydict(
+        {"conv_id": ["c"] * n, "turn_idx": list(range(n)),
+         "role": roles, "text": texts},
+        schema=pa.schema([("conv_id", pa.string()), ("turn_idx", pa.int32()),
+                          ("role", pa.string()), ("text", pa.string())]))
+    out = kernel.extract_batch(batch, ct.default_weights()).to_pylist()
+    assert len(out) == n
+    for text, role, row in zip(texts, roles, out):
+        want = R.extract_turn(text, role=role)
+        spans = [(s["start"], s["end"], R.SPAN_KINDS[s["kind_code"]], s["score"])
+                 for s in row["spans"]]
+        assert row["extracted_text"] == want.extracted_text, text
+        assert row["payload_kind"] == want.payload_kind, text
+        assert row["n_spans"] == want.n_spans, text
+        assert spans == want.spans, text
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(st.tuples(turn_texts, turn_roles), min_size=1, max_size=50))
+def test_kernel_batch_matches_per_turn_reference(turns):
+    """kernel.extract_batch scores blocks and segments spans once per
+    batch; every row must equal the per-turn reference."""
+    _kernel_vs_reference([t for t, _ in turns], [r for _, r in turns])
+
+
+def test_kernel_batch_of_all_golden_cases():
+    gdir = os.path.join(os.path.dirname(__file__), "golden")
+    cases = []
+    for fname in sorted(os.listdir(gdir)):
+        if fname.endswith(".json"):
+            with open(os.path.join(gdir, fname)) as f:
+                cases.append(json.load(f))
+    _kernel_vs_reference([g["payload"] for g in cases],
+                         [g.get("role") for g in cases])
 
 
 def test_asof_union_merge_matches_naive_oracle(spark):

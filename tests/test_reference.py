@@ -147,3 +147,20 @@ def test_classify_kernel_is_batched_matvec():
     drop = ct.score_blocks(np.array([30.0]), np.array([0.9]),
                            np.array([0.0]), np.array([0.0]))
     assert drop[0] < 0
+
+
+def test_score_blocks_is_batch_invariant():
+    """The kernel scores a whole Arrow batch of blocks in one call, the
+    reference one turn's blocks; keep decisions compare against τ=0.0
+    exactly, so a row's score must not depend on the call's shape."""
+    rng = np.random.default_rng(3)
+    n = 1000
+    lengths = rng.integers(1, 300, n).astype(np.float64)
+    ld = rng.random(n)
+    code = (rng.random(n) < 0.2).astype(np.float64)
+    cjk = rng.random(n)
+    whole = ct.score_blocks(lengths, ld, code, cjk)
+    one_by_one = np.concatenate([
+        ct.score_blocks(lengths[i:i + 1], ld[i:i + 1], code[i:i + 1], cjk[i:i + 1])
+        for i in range(n)])
+    assert whole.tobytes() == one_by_one.tobytes()
