@@ -13,9 +13,10 @@ Protocol (same honesty rules as run_bench.py):
   scales partitions with cores because the extraction job's partition
   count is part of its interface; here the suite queries fix their own
   shapes).
-- per-query shuffle read/write bytes and the heaviest stage's task
-  histogram come from the Spark UI REST API (stages completed during
-  the timed window), recorded as skew evidence.
+- per-query shuffle read/write bytes, executor CPU, job count and task
+  skew (max/median task time of the longest stage) come from the status
+  store (perfbench.sparkstat, UI off) for the timed run's job group,
+  recorded as skew evidence.
 - scaling efficiency per query = (wall_N / wall_4N) / 4. Short queries
   (<1 s) are dominated by fixed job overhead and are reported but not
   meaningful; the suite-level number uses the wall SUMS.
@@ -49,36 +50,18 @@ QUERIES = [
 CONFIGS = [("N", 2, "local[2]"), ("4N", 8, "local[8]")]
 
 _CHILD = r"""
-import json, sys, time, urllib.request
-sys.path.insert(0, SRC)
+import json, sys, time
+sys.path[:0] = [REPO, SRC]
 from ocrflow.session import build_session
 import ocrflow.dataops  # noqa: F401
 import ocrflow.multimodal  # noqa: F401
 from ocrflow.queries import QUERIES
+from perfbench.sparkstat import StatusReader
 
 spark = build_session(master=MASTER, app="ocrflow-qscale",
-                      shuffle_partitions=32,
-                      extra={"spark.ui.enabled": "true",
-                             "spark.ui.port": "4050"})
+                      shuffle_partitions=32)
 spark.sparkContext.setLogLevel("ERROR")
-ui = spark.sparkContext.uiWebUrl
-
-
-def _get(path):
-    with urllib.request.urlopen(ui + "/api/v1" + path, timeout=10) as r:
-        return json.load(r)
-
-
-app_id = _get("/applications")[0]["id"]
-
-
-def stages():
-    try:
-        return {(s["stageId"], s["attemptId"]): s
-                for s in _get(f"/applications/{app_id}/stages?status=complete")}
-    except Exception:
-        return {}
-
+status = StatusReader(spark)
 
 # global warmup: executors, codegen, python workers
 QUERIES["agg_hash"](spark, SF).count()
@@ -93,43 +76,26 @@ def sink(df):
 out = {}
 for name in PLAN:
     fn = QUERIES[name]
+    spark.sparkContext.setJobGroup(f"untimed/{name}", name)
     sink(fn(spark, SF))              # per-query warmup (JIT, OS page cache)
     rows = fn(spark, SF).count()
-    before = set(stages())
+    spark.sparkContext.setJobGroup(f"timed/{name}", name)
     t0 = time.perf_counter()
     sink(fn(spark, SF))
     wall = time.perf_counter() - t0
-    time.sleep(0.3)                  # let the listener flush stage metrics
-    after = stages()
-    mine = [s for k, s in after.items() if k not in before]
-    sr = sum(s.get("shuffleReadBytes", 0) for s in mine)
-    sw = sum(s.get("shuffleWriteBytes", 0) for s in mine)
-    ntasks = sum(s.get("numCompleteTasks", 0) for s in mine)
-    hist = None
-    if mine:
-        heavy = max(mine, key=lambda s: s.get("executorRunTime", 0))
-        try:
-            q = _get(f"/applications/{app_id}/stages/{heavy['stageId']}/"
-                     f"{heavy['attemptId']}/taskSummary"
-                     f"?quantiles=0.5,0.95,1.0")
-            hist = {"stage_task_p50_ms": round(q["executorRunTime"][0], 1),
-                    "stage_task_p95_ms": round(q["executorRunTime"][1], 1),
-                    "stage_task_max_ms": round(q["executorRunTime"][2], 1),
-                    "stage_n_tasks": heavy.get("numCompleteTasks")}
-        except Exception:
-            hist = None
+    st = status.group(f"timed/{name}")
     out[name] = {"wall_s": round(wall, 3), "rows": rows,
-                 "shuffle_read_mb": round(sr / 2**20, 2),
-                 "shuffle_write_mb": round(sw / 2**20, 2),
-                 "n_stages": len(mine), "n_tasks": ntasks,
-                 "heavy_stage": hist}
+                 "shuffle_read_mb": round(st["shuffle_read_mb"], 2),
+                 "shuffle_write_mb": round(st["shuffle_write_mb"], 2),
+                 "executor_cpu_s": round(st["executor_cpu_s"], 3),
+                 "jobs": st["jobs"], "task_skew": round(st["task_skew"], 2)}
 print("CHILD_JSON:" + json.dumps(out))
 spark.stop()
 """
 
 
 def run_config(master: str, cores: int, plan: list[str]) -> dict:
-    code = (f"SRC = {os.path.join(REPO, 'src')!r}\n"
+    code = (f"REPO = {REPO!r}\nSRC = {os.path.join(REPO, 'src')!r}\n"
             f"MASTER = {master!r}\nSF = {SF_DIR!r}\nPLAN = {plan!r}\n"
             + _CHILD)
     cpu = f"0-{cores - 1}"
@@ -148,7 +114,7 @@ def main() -> None:
     ap.add_argument("--queries", default=",".join(QUERIES))
     ap.add_argument("--sf-dir", default=None,
                     help="override input dir (e.g. a replicated x16 dir "
-                         "from bench/join_scale_bench.replicate)")
+                         "from bench/growth.replicate)")
     ap.add_argument("--out", default="query_scaling.json")
     args = ap.parse_args()
     plan = args.queries.split(",")
