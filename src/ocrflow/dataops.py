@@ -7694,6 +7694,10 @@ def decontaminate_fuzzy(spark, sf):
     # the scan's single task — the surviving sibling of the excluded
     # InferFiltersFromGenerate trap). The guard's value is always true;
     # its nondeterministic flag blocks the substitution (plan-verified).
+    # It blocks ALL predicate pushdown through this projection, not
+    # just the n_g one: the bench and corpus branches' doc_id % 11
+    # filters also stay above it, so each branch runs the gram regex
+    # over every document instead of only its own share.
     posts = (garr.select(
                  "doc_id",
                  F.when(F.monotonically_increasing_id() >= 0,

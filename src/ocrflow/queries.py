@@ -4631,11 +4631,14 @@ def tpch_q21_shape(spark, sf):
     # SHUFFLE_HASH on the semi/anti legs (guide §3.1): at fact-table
     # stats the planner falls back to sort-merge for these
     # extra-condition joins, sorting all three 6M-row legs; the hint
-    # pins shuffled-hash (no sorts — the per-partition build is
-    # lineitem/N_partitions, bounded at any scale by partition sizing
-    # and AQE skew-split). Measured at the 10× replica: median
-    # 1.64 → 1.44 s interleaved, and the executed plan's three Sort
-    # nodes disappear.
+    # pins shuffled-hash (no sorts). The per-partition build is
+    # lineitem/N_partitions and must fit in task memory: a shuffled
+    # hash join has no sort-merge spill fallback, and AQE skew-split
+    # cannot split the build side of the anti-join, so an oversized
+    # partition fails the task instead of spilling. Size shuffle
+    # partitions so the largest build stays well under task memory.
+    # Measured at the 10× replica: median 1.64 → 1.44 s
+    # interleaved, and the executed plan's three Sort nodes disappear.
     l2 = li.select(F.col("l_orderkey").alias("k2"),
                    F.col("l_suppkey").alias("s2")).hint("shuffle_hash")
     l3 = li.select(F.col("l_orderkey").alias("k3"),

@@ -42,9 +42,13 @@ def _export_pythonpath() -> str:
     cur = os.environ.get("PYTHONPATH", "")
     if pkg_dir not in cur.split(":"):
         os.environ["PYTHONPATH"] = f"{pkg_dir}:{cur}" if cur else pkg_dir
-    # one BLAS thread per python worker: N workers × M BLAS threads
-    # oversubscribes cores catastrophically on tiny kernel matvecs
-    # (measured 15× per-turn slowdown at local[32] before pinning)
+    # one BLAS thread per python worker: Spark already runs one worker
+    # per core, so N workers × M BLAS threads oversubscribe the cores.
+    # The extraction kernel makes no BLAS call (chartables.score_blocks
+    # is an elementwise sum); the pandas-UDF matrix products of the
+    # ANN and embedding-LSH ops in dataops do. The pin was measured
+    # when the kernel still scored blocks with a small matvec: 15×
+    # per-turn slowdown at local[32] before pinning.
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
                 "NUMEXPR_NUM_THREADS", "VECLIB_MAXIMUM_THREADS"):
         os.environ.setdefault(var, "1")

@@ -493,21 +493,33 @@ def test_widen_barriers_keep_heavy_exprs_above_rr_exchange(spark):
     # scan-parallelism guard's round-robin exchange — predicate
     # pushdown used to substitute the computed columns and run them
     # per row at scan parallelism (one task on one-row-group inputs)
+    # per-exchange scope: an exchange's subtree is the lines after
+    # it that sit deeper in the tree, found by the depth of their
+    # "+- "/":- " marker; decontaminate_fuzzy has one exchange per branch
     import re
+
+    def depth(line):
+        m = re.match(r"[ :|]*[+:]- ", line)
+        return m.end() if m else 0
+
     for key, needle in (("corpus_curation_e2e", "regexp_extract_all"),
                         ("emb_quantize_int8", "lambdafunction"),
                         ("decontaminate_fuzzy", "regexp_extract_all")):
         plan = _plan(QUERIES[key](spark, SF_DIR))
         lines = plan.splitlines()
-        rrs = [i for i, l in enumerate(lines)
-               if "RoundRobinPartitioning" in l]
-        if not rrs:  # widen no-op (multi-split input): nothing to pin
-            continue
-        rr = max(rrs)
-        below = [l for l in lines[rr:]
-                 if re.search(needle, l)
-                 and ("Filter" in l or "DataFilters" in l)]
-        assert not below, f"{key}: heavy expr below RR exchange: {below[:1]}"
+        # no RR exchange = widen no-op (multi-split input): nothing to pin
+        for rr, head in enumerate(lines):
+            if "RoundRobinPartitioning" not in head:
+                continue
+            below = []
+            for line in lines[rr + 1:]:
+                if depth(line) <= depth(head):
+                    break
+                if (re.search(needle, line)
+                        and ("Filter" in line or "DataFilters" in line)):
+                    below.append(line)
+            assert not below, (
+                f"{key}: heavy expr below RR exchange: {below[:1]}")
 
 
 def test_widen_probe_memo_and_decision(spark):
